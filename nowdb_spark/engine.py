@@ -111,6 +111,7 @@ class Engine:
         r = self.rexecute(sql)
         if isinstance(r, CursorResult):
             rows = r.fetch(1)
+            self.drop_cursor(r.cursor_id)
             return rows[0] if rows else None
         if isinstance(r, RowResult):
             return r.row()
@@ -894,27 +895,33 @@ class Engine:
         if self.strict and isinstance(n, A.Select):
             self._validate_strict_indexes(n)
         stmt_types: dict = {}
-        cur = CursorResult(self._bind_select(n, stmt_types))
-        cur.source_types = stmt_types
-        # register for FETCH/CLOSE paging (server-side cursor ids,
-        # ifc/nowdb.c:1206 openCursor)
+        df = self._bind_select(n, stmt_types)
+        return self._open_cursor(CursorResult(df, stmt_types))
+
+    def _open_cursor(self, cur: CursorResult) -> CursorResult:
+        """Register for FETCH/CLOSE paging (server-side cursor ids,
+        ifc/nowdb.c:1206 openCursor)."""
         cid = str(self._next_cursor)
         self._next_cursor += 1
         cur.cursor_id = cid
         self._cursors[cid] = cur
         return cur
 
+    def drop_cursor(self, cid: str) -> None:
+        """Forget a cursor and stop its JVM-side iterator."""
+        cur = self._cursors.pop(cid, None)
+        if cur is not None:
+            cur.release()
+
     def _fetch(self, n: A.FetchStmt) -> Result:
         cur = self._cursors.get(n.cursor_id)
         if cur is None:
             raise EngineError(f"no such cursor {n.cursor_id!r}")
-        rows = cur.fetch(n.n or 1000)
-        return RowResult(cur.columns, rows)
+        rb = cur.take(n.n or 1000)
+        return RowResult(cur.columns, cur.to_rows(rb), batch=rb)
 
     def _close(self, n: A.CloseStmt) -> Result:
-        cur = self._cursors.pop(n.cursor_id, None)
-        if cur is not None:
-            cur.release()
+        self.drop_cursor(n.cursor_id)
         return StatusResult()
 
     # --- maintenance ----------------------------------------------
@@ -969,7 +976,7 @@ class Engine:
         if isinstance(out, Result):
             return out
         if isinstance(out, DataFrame):
-            return CursorResult(out)
+            return self._open_cursor(CursorResult(out))
         if out is None:
             return StatusResult()
         if isinstance(out, (list, tuple)):

@@ -246,14 +246,21 @@ def ewma(df: DataFrame, stamp_col: str, key_col: str, value_col: str,
         if tbl.num_rows == 0:
             return tbl.append_column(
                 "ewma", pa.array([], type=pa.float64()))
-        idx = pc.sort_indices(
-            tbl, sort_keys=[(c, "ascending") for c in order])
-        tbl = tbl.take(idx)
+        # a NaN key is missing to pandas (isna) like a NULL one: same
+        # null mask, and sorted among the NULLs (Arrow alone would
+        # sort every NaN before every NULL)
         kc = tbl.column(key_col)
+        kmiss = pc.is_null(kc, nan_is_null=True)
+        skey = pc.if_else(kmiss, pa.scalar(None, kc.type), kc)
+        idx = pc.sort_indices(
+            tbl.set_column(tbl.schema.get_field_index(key_col), key_col,
+                           skey),
+            sort_keys=[(c, "ascending") for c in order])
+        tbl = tbl.take(idx)
         vals = (pc.cast(tbl.column(value_col), pa.float64())
                 .to_numpy(zero_copy_only=False))
-        keys = kc.to_numpy(zero_copy_only=False)
-        kn = np.asarray(pc.is_null(kc).to_numpy(zero_copy_only=False),
+        keys = tbl.column(key_col).to_numpy(zero_copy_only=False)
+        kn = np.asarray(kmiss.take(idx).to_numpy(zero_copy_only=False),
                         dtype=bool)
         out = _ewma_banded(vals, keys, kn, alpha, beta)
         return tbl.append_column("ewma", pa.array(out, type=pa.float64()))

@@ -32,6 +32,13 @@ One Engine is shared across sessions (the SparkSession is one JVM);
 cursor ids are engine-global like the reference's server-side cursor
 registry. Statement execution is serialized with a lock — Spark job
 submission itself is thread-safe, but catalog mutations are not.
+
+A cursor's source is one Arrow stream that the JVM serves a partition
+at a time, so the server holds at most one partition of a result. A
+binary cursor frame is that stream's next `cursor_batch_rows` rows,
+encoded column by column (`wire.encode_batch`); the JSON protocol and
+FETCH statements get row tuples from the same batches. Cursors a
+session leaves open are released when it disconnects.
 """
 
 from __future__ import annotations
@@ -71,14 +78,21 @@ def _serialize(res: Result) -> dict:
     return {"kind": "status", **base}
 
 
-class _RowTooBig(RuntimeError):
-    """A single encoded row exceeds the client's fixed frame buffer."""
-
-
 class _Session(socketserver.StreamRequestHandler):
     def handle(self):  # one thread per session (reference parity)
         eng: Engine = self.server.engine
         lock: threading.Lock = self.server.exec_lock
+        self._opened: list[str] = []   # open cursors this session made
+        try:
+            self._dispatch(eng, lock)
+        finally:
+            # cursors the client never closed die with its session
+            if any(c in eng._cursors for c in self._opened):
+                with lock:
+                    for cid in self._opened:
+                        eng.drop_cursor(cid)
+
+    def _dispatch(self, eng: Engine, lock: threading.Lock) -> None:
         # sniff ONE byte: only a binary session can start with 'S'
         # (JSON requests are '{'-led lines); reading 3 up front
         # deadlocked any JSON client whose first line was < 3 bytes
@@ -93,6 +107,13 @@ class _Session(socketserver.StreamRequestHandler):
             head += rest
         self._pushback = head
         self._handle_json(eng, lock)
+
+    def _execute(self, eng: Engine, sql: str) -> Result:
+        res = eng.execute(sql)
+        if isinstance(res, CursorResult):
+            self._opened = [c for c in self._opened if c in eng._cursors]
+            self._opened.append(res.cursor_id)
+        return res
 
     # --- binary session (reference wire protocol) -------------------
     def _handle_binary(self, eng: Engine, lock: threading.Lock) -> None:
@@ -128,26 +149,28 @@ class _Session(socketserver.StreamRequestHandler):
                 if m and m.group(1).lower() == "fetch":
                     self._bin_fetch(eng, m.group(2))
                     continue
-                res = eng.execute(sql)
+                res = self._execute(eng, sql)
                 if isinstance(res, CursorResult):
                     # openCursor semantics (ifc/nowdb.c:1206): first
                     # batch rides with the cursor frame; an empty
                     # cursor is a bare EOF and is closed server-side
                     try:
                         payload = self._encode_batch(res, batch)
-                    except _RowTooBig as e:
-                        eng._cursors.pop(res.cursor_id, None)
+                    except wire.RowTooBig as e:
+                        eng.drop_cursor(res.cursor_id)
                         self._send_raw(wire.frame_err(1, str(e)))
                         continue
                     if payload is None:
-                        eng._cursors.pop(res.cursor_id, None)
+                        eng.drop_cursor(res.cursor_id)
                         self._send_raw(wire.frame_eof())
                         continue
                     self._send_raw(wire.frame_cursor(
                         int(res.cursor_id), payload))
                 elif isinstance(res, RowResult):
-                    self._send_raw(wire.frame_row(
-                        wire.encode_rows(res._rows)))
+                    payload = (wire.encode_rows(res._rows)
+                               if res.batch is None else
+                               wire.encode_batch(res.batch, cap=None)[0])
+                    self._send_raw(wire.frame_row(payload))
                 elif isinstance(res, ReportResult):
                     self._send_raw(wire.frame_report(
                         res.affected, res.errors, res.runtime))
@@ -166,8 +189,8 @@ class _Session(socketserver.StreamRequestHandler):
         try:
             payload = self._encode_batch(
                 cur, self.server.cursor_batch_rows)
-        except _RowTooBig as e:
-            eng._cursors.pop(cid, None)
+        except wire.RowTooBig as e:
+            eng.drop_cursor(cid)
             self._send_raw(wire.frame_err(1, str(e)))
             return
         if payload is None:
@@ -176,54 +199,15 @@ class _Session(socketserver.StreamRequestHandler):
         self._send_raw(wire.frame_cursor(int(cid), payload))
 
     def _encode_batch(self, cur: CursorResult, batch: int):
-        """Encode up to `batch` rows, byte-capped well under the
-        client's fixed 1 MB receive buffer (nowdbclient.c BUFSIZE);
-        rows that would overflow wait on the cursor for the next
-        fetch. None = cursor exhausted."""
+        """Encode the cursor's next `batch` rows, cut where the payload
+        would pass 512 KiB (wire.CURSOR_CAP); rows past the cut stay
+        on the cursor for the next fetch. None = cursor exhausted."""
         from nowdb_spark import wire
-        pending = getattr(cur, "_wire_pending", None) or []
-        want = batch - len(pending)
-        rows = pending + (cur.fetch(want) if want > 0 else [])
-        if not rows:
+        payload, sent = wire.encode_batch(cur.batch(batch), cur.hints)
+        if not sent:
             return None
-        hints = self._hints(cur)
-        out = bytearray()
-        sent = 0
-        for r in rows:
-            n0 = len(out)
-            for i, v in enumerate(r):
-                wire.encode_value(v, out, hints[i])
-            out.append(wire.EOR)
-            if len(out) - n0 > wire.MAX_FRAME - 16:
-                # a SINGLE row the client's fixed 1 MB buffer cannot
-                # hold: surface an error frame instead of emitting an
-                # oversized frame that aborts the connection
-                raise _RowTooBig(
-                    f"row exceeds wire frame limit "
-                    f"({len(out) - n0} bytes)")
-            if len(out) > 0x80000 and sent > 0:
-                del out[n0:]  # push this row back
-                break
-            sent += 1
-        cur._wire_pending = rows[sent:]
-        return bytes(out)
-
-    @staticmethod
-    def _hints(cur: CursorResult) -> list:
-        """Wire type hints per column: columns the engine DECLARED
-        as time (mount overrides, stamp props — threaded through
-        CursorResult.source_types at bind time) go out with the TIME
-        type byte when they are physically int64 ns stamps. Computed
-        aliases fall back to physical inference."""
-        try:
-            from nowdb_spark.engine import _infer_nowdb_types
-            t = _infer_nowdb_types(cur.df)
-            src = getattr(cur, "source_types", None) or {}
-            return [("time" if src.get(c) == "time"
-                     and t.get(c) == "int"
-                     else t.get(c)) for c in cur.columns]
-        except Exception:  # noqa: BLE001
-            return [None] * len(cur.columns)
+        cur.advance(sent)
+        return payload
 
     def _send_raw(self, frame: bytes) -> None:
         self.wfile.write(frame)
@@ -251,7 +235,7 @@ class _Session(socketserver.StreamRequestHandler):
                 break
             if op == "execute":
                 with lock:
-                    res = eng.execute(req.get("sql", ""))
+                    res = self._execute(eng, req.get("sql", ""))
                 self._send(_serialize(res))
             elif op == "fetch":
                 with lock:

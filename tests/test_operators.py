@@ -807,6 +807,35 @@ def test_ewma_columnwise_kernel_bit_exact(spark):
             assert g == w, (k, g, w)   # bitwise, not approx
 
 
+@pytest.mark.parametrize("num_buckets", [1, 5])
+def test_ewma_float_key_nan_and_null_match_pandas_kernel(spark,
+                                                         num_buckets):
+    """A float key's NaN and NULL are one missing key to pandas
+    (`isna()`, sorted together, last); the Arrow kernel must group and
+    order them the same way, bit for bit."""
+    import math
+    import random
+
+    from nowdb_spark.operators import timeseries as TS
+
+    rng = random.Random(num_buckets)
+    keys = [0.5, -1.25, 3.0, float("nan"), None]
+    rows = [(rng.choice(keys), rng.randrange(1000), eid,
+             round(rng.uniform(-10, 10), 3)) for eid in range(400)]
+    df = spark.createDataFrame(
+        rows, "k double, ts long, event_id int, value double")
+
+    def run(kernel):
+        return {r["event_id"]: r["ewma"] for r in TS.ewma(
+            df, "ts", "k", "value", alpha=0.3, tiebreak="event_id",
+            num_buckets=num_buckets, kernel=kernel).collect()}
+    want, got = run("pandas"), run("arrow")
+    assert set(got) == set(want) == set(range(400))
+    for eid, w in want.items():
+        g = got[eid]
+        assert (math.isnan(w) and math.isnan(g)) or g == w, (eid, g, w)
+
+
 def test_ewma_skewed_lengths_bounded_memory(spark):
     """One 500k-row key sharing a bucket with 50k two-row keys: the
     un-banded kernel would allocate a 50 001 × 500 000 matrix (~200 GB
